@@ -54,11 +54,7 @@ from rindex_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from rindex_spark.operators.knn import (
-    build_knn_graph,
-    knn_for_queries,
-    release_round_states,
-)
+from rindex_spark.operators.knn import build_knn_graph, knn_for_queries
 from rindex_spark.operators.range_query import range_join
 from rindex_spark.operators.raster import (
     raster_to_cells_vector,
@@ -71,6 +67,7 @@ from rindex_spark.operators.sessions import session_stats, sessionize
 from rindex_spark.operators.temporal import asof_join, interval_join
 from rindex_spark.operators.tiling import assign_tiles, tile_pyramid
 from rindex_spark.operators.stats import cell_stats, index_stats, knn_dist_of, neighbors_of
+from rindex_spark.plans.cache import release_cached
 
 __version__ = "0.4.0"
 
@@ -88,7 +85,7 @@ __all__ = [
     "per_host_cap",
     "build_knn_graph",
     "knn_for_queries",
-    "release_round_states",
+    "release_cached",
     "range_join",
     "reverse_knn",
     "rknn_stats",

@@ -48,15 +48,13 @@ class EngineConfig:
                       be comfortably larger than k.
     max_rounds:       safety cap on ring-expansion iterations.
     hot_cell_factor:  a cell with more than hot_cell_factor * mean
-                      points is "hot" and gets salted repartitioning.
-    salt_buckets:     number of salt buckets for hot cells.
+                      points is "hot" (skew.hot_cells).
     """
 
     k: int = 10
     target_per_cell: int | None = None
     max_rounds: int = 64
     hot_cell_factor: float = 8.0
-    salt_buckets: int = 8
 
     def __post_init__(self) -> None:
         # Mirrors the reference's parameter validation (rindex.rs:59-66):

@@ -5,23 +5,12 @@ The reference's only metric is planar Euclidean
 op order — sub, mul, add, sqrt — as a pure column expression so results
 are bit-identical to both the Rust reference and a DuckDB oracle
 computing the same expression (all three are strict IEEE-754 double).
-
-Haversine is offered for real lon/lat workloads but is NOT used in any
-parity test (SURVEY.md §2.2 euclidean row).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-EARTH_RADIUS_M = 6_371_008.8
-
-
-def euclidean(ax: Column, ay: Column, bx: Column, by: Column) -> Column:
-    dx = ax - bx
-    dy = ay - by
-    return F.sqrt(dx * dx + dy * dy)
 
 
 def euclidean_nd(ax: Column, ay: Column, bx: Column, by: Column, extra_pairs=()) -> Column:
@@ -38,20 +27,3 @@ def euclidean_nd(ax: Column, ay: Column, bx: Column, by: Column, extra_pairs=())
         d = a - b
         acc = acc + d * d
     return F.sqrt(acc)
-
-
-def euclidean_sql(ax: str, ay: str, bx: str, by: str) -> str:
-    """The same expression as ANSI SQL text (for DuckDB oracles)."""
-    return f"sqrt(({ax}-{bx})*({ax}-{bx}) + ({ay}-{by})*({ay}-{by}))"
-
-
-def haversine_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
-    """Great-circle distance in meters (degrees in)."""
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon / 2) * F.sin(dlon / 2)
-    )
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))

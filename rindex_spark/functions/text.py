@@ -102,21 +102,6 @@ def lang_id(text) -> "F.Column":
     return expr.otherwise(F.lit("und"))
 
 
-def lang_id_series(text: pd.Series) -> pd.Series:
-    """Pandas twin of ``lang_id`` (test oracle / offline use)."""
-
-    def _one(t: str) -> str:
-        toks = set(re.findall(r"[a-zà-ÿ]+", (t or "").lower()))
-        best, best_n = "und", 0
-        for lang, sw in _LANG_STOPWORDS.items():
-            n = len(toks & set(sw))
-            if n > best_n:
-                best, best_n = lang, n
-        return best
-
-    return text.map(_one)
-
-
 # ---------------------------------------------------------------------------
 # quality / token stats — pure column expressions (JVM-side, no UDF)
 

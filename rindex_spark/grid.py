@@ -25,42 +25,6 @@ from pyspark.sql import functions as F
 from rindex_spark.config import EngineConfig, GridSpec
 
 
-def infer_grid_adaptive(
-    points: DataFrame,
-    cfg: EngineConfig,
-    x: str = "x",
-    y: str = "y",
-    quantile: float = 0.95,
-    slack: float = 2.0,
-) -> GridSpec:
-    """Density-aware cell sizing: start from the mean-occupancy grid,
-    then shrink the cell so the POINT-WEIGHTED p95 occupancy is about
-    ``target_per_cell`` — the distributed answer to urban-density skew
-    (the reference's max-variance node splits play this role,
-    rindex.rs:636-713).  Dense cores get small cells (bounded per-query
-    candidate sets); sparse regions simply search wider, mostly-empty
-    rings, which cost almost nothing.  One extra aggregate job."""
-    spec0 = infer_grid(points, cfg, x, y)
-    t = cfg.effective_target_per_cell
-    occ = (
-        with_cells(points.select(F.col(x).alias("x"), F.col(y).alias("y")), spec0)
-        .groupBy("ix", "iy")
-        .agg(F.count(F.lit(1)).alias("occ"))
-    )
-    row = occ.agg(
-        F.expr(f"percentile(occ, {quantile}, occ)").alias("p"),
-    ).collect()[0]
-    p = row["p"] or 0.0
-    if p > slack * t:
-        shrink = (t / p) ** 0.5
-        return GridSpec(
-            cell_size=max(spec0.cell_size * shrink, 1e-9),
-            x0=spec0.x0,
-            y0=spec0.y0,
-        )
-    return spec0
-
-
 def infer_grid(points: DataFrame, cfg: EngineConfig, x: str = "x", y: str = "y") -> GridSpec:
     """Choose a cell size so the mean occupied-area cell holds roughly
     ``cfg.target_per_cell`` points — the layout-quality decision that the
@@ -68,14 +32,7 @@ def infer_grid(points: DataFrame, cfg: EngineConfig, x: str = "x", y: str = "y")
 
     One tiny aggregate job; everything else stays lazy.
     """
-    row = points.agg(
-        F.min(x).alias("xmin"),
-        F.max(x).alias("xmax"),
-        F.min(y).alias("ymin"),
-        F.max(y).alias("ymax"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return grid_from_extent(row, cfg)
+    return grid_and_extent(points, cfg, x, y)[0]
 
 
 def grid_and_extent(
@@ -117,6 +74,34 @@ def grid_from_extent(row, cfg: EngineConfig) -> GridSpec:
     return GridSpec(cell_size=cs, x0=float(row["xmin"]), y0=float(row["ymin"]))
 
 
+def shrink_to_density(
+    points: DataFrame, spec: GridSpec, cfg: EngineConfig
+) -> GridSpec:
+    """Density-aware cell sizing: starting from the mean-occupancy grid
+    ``spec``, shrink the cell so the POINT-WEIGHTED p95 occupancy is
+    about ``target_per_cell`` — skewed (clustered/urban) data makes
+    mean-sized cells quadratically expensive in the cores (the
+    reference's max-variance node splits play this role,
+    rindex.rs:636-713).  Dense cores get small cells (bounded per-query
+    candidate sets); sparse regions simply search wider, mostly-empty
+    rings, which cost almost nothing.  Cells within 2x of the target
+    keep ``spec``.  One aggregate job over ``points`` (x, y)."""
+    occ = (
+        with_cells(points.select("x", "y"), spec)
+        .groupBy("ix", "iy")
+        .agg(F.count(F.lit(1)).alias("occ"))
+    )
+    p = occ.agg(F.expr("percentile(occ, 0.95, occ)").alias("p")).collect()[0]["p"]
+    t = cfg.effective_target_per_cell
+    if p and p > 2.0 * t:
+        return GridSpec(
+            cell_size=max(spec.cell_size * (t / p) ** 0.5, 1e-9),
+            x0=spec.x0,
+            y0=spec.y0,
+        )
+    return spec
+
+
 def cell_index(origin: float, cell_size: float, v: Column) -> Column:
     return F.floor((v - F.lit(origin)) / F.lit(cell_size)).cast("long")
 
@@ -145,32 +130,6 @@ def explode_block(
     out = df.withColumn("cix", F.explode(F.sequence(F.col(qix) - r, F.col(qix) + r)))
     out = out.withColumn("ciy", F.explode(F.sequence(F.col(qiy) - r, F.col(qiy) + r)))
     return out
-
-
-def explode_annulus(
-    df: DataFrame,
-    r_lo: Column,
-    r_hi: Column,
-    qix: str = "qix",
-    qiy: str = "qiy",
-) -> DataFrame:
-    """Explode each row to cells with Chebyshev ring distance in
-    (r_lo, r_hi] — the incremental frontier of ring expansion, so a
-    query never re-scans cells it already visited (mirrors the
-    visited-ordering of rindex.rs:785-802 best-first descent).
-    """
-    hi = r_hi.cast("long")
-    out = df.withColumn("_rlo", r_lo.cast("long")).withColumn("_rhi", hi)
-    out = out.withColumn(
-        "cix", F.explode(F.sequence(F.col(qix) - F.col("_rhi"), F.col(qix) + F.col("_rhi")))
-    )
-    out = out.withColumn(
-        "ciy", F.explode(F.sequence(F.col(qiy) - F.col("_rhi"), F.col(qiy) + F.col("_rhi")))
-    )
-    cheb = F.greatest(
-        F.abs(F.col("cix") - F.col(qix)), F.abs(F.col("ciy") - F.col(qiy))
-    )
-    return out.filter(cheb > F.col("_rlo")).drop("_rlo", "_rhi")
 
 
 def ring_lower_bound(

@@ -28,9 +28,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType, StringType
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql.types import (
+    ArrayType,
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from rindex_spark.plans.cache import cache_frame, checkpoint_frame, release_cached
 from rindex_spark.plans.scan import spread_scan
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -134,25 +141,39 @@ def _exploded_grams(
     0.3s, so the cost is the Arrow list column crossing into the
     Generate, not explode itself).  Emitting the flattened pairs
     directly from Python skips that conversion entirely; downstream
-    consumers are joins/aggregates, so row order is irrelevant."""
-    from rindex_spark.plans.scan import spread_scan
+    consumers are joins/aggregates, so row order is irrelevant.
 
-    cols = ([id_col] if id_col else []) + [text_col]
-    src = spread_scan(df.select(*cols))
-
+    The id column keeps its input type and its nulls.  Arrow -> pandas
+    turns an integer column holding nulls into float64, which rounds
+    ids past 2^53, so integer ids cross as exact non-null values plus
+    a null mask and come back as a pandas nullable integer array."""
     if id_col:
+        id_field = df.schema[id_col]
+        integral = isinstance(id_field.dataType, IntegralType)
+        idc = F.col(id_col)
+        cols = (
+            [F.coalesce(idc, F.lit(0)).alias(id_col), idc.isNull().alias("__null")]
+            if integral
+            else [idc]
+        )
+        src = spread_scan(df.select(*cols, text_col))
 
         def fn(batches):
             for b in batches:
-                ids = b[id_col].to_numpy()
                 lists = [_shingle_list(t, n) for t in b[text_col]]
                 lens = np.array([len(x) for x in lists], dtype=np.int64)
                 flat = [g for lst in lists for g in lst]
-                yield pd.DataFrame(
-                    {id_col: np.repeat(ids, lens), "gram": pd.Series(flat, dtype=object)}
-                )
+                ids = b[id_col].to_numpy().repeat(lens)
+                if integral:
+                    ids = pd.arrays.IntegerArray(
+                        ids.astype(np.int64), b["__null"].to_numpy().repeat(lens)
+                    )
+                yield pd.DataFrame({id_col: ids, "gram": pd.Series(flat, dtype=object)})
 
-        return src.mapInPandas(fn, f"{id_col} long, gram string")
+        schema = StructType([id_field, StructField("gram", StringType())])
+        return src.mapInPandas(fn, schema)
+
+    src = spread_scan(df.select(text_col))
 
     def fn(batches):
         for b in batches:
@@ -210,19 +231,20 @@ def ngram_jaccard_pairs(
     -partition build side is index/partitions-sized, and sorting the
     cardinality-heavy pair stream is pure waste (guide §3.1).
     """
+    release_cached("ngram_jaccard_pairs")
     _bcast = F.broadcast if broadcast_doc_stats else (lambda d: d)
-    sh = (
+    # referenced by the index, the size table, and BOTH verify sides:
+    # without persist the shingle transform and everything under it
+    # re-executes once per reference (measured 80s vs 8s on the 5k-doc
+    # skew bench)
+    sh = cache_frame(
         with_shingles(
             spread_scan(df.select(F.col(id_col).alias("doc"), F.col(text_col))),
             text_col, n,
         )
         .select("doc", "shingles")
-        .withColumn("sh_size", F.size("shingles"))
-        # referenced by the index, the size table, and BOTH verify
-        # sides: without persist the shingle transform and everything
-        # under it re-executes once per reference (measured 80s vs 8s
-        # on the 5k-doc skew bench)
-        .persist(StorageLevel.MEMORY_ONLY)
+        .withColumn("sh_size", F.size("shingles")),
+        "ngram_jaccard_pairs",
     )
     # inverted index straight from a mapInPandas shingle pass (r6 r3):
     # same (doc, shingle) multiset as exploding sh's arrays, without
@@ -239,10 +261,11 @@ def ngram_jaccard_pairs(
             .filter(F.col("count") > max_df)
             .select("shingle")
         )
-        inv = (
-            inv.join(F.broadcast(hot), "shingle", "left_anti")
-            .select("doc", F.xxhash64("shingle").alias("shingle"))
-            .persist(StorageLevel.MEMORY_ONLY)
+        inv = cache_frame(
+            inv.join(F.broadcast(hot), "shingle", "left_anti").select(
+                "doc", F.xxhash64("shingle").alias("shingle")
+            ),
+            "ngram_jaccard_pairs",
         )
         # counts straight off the capped index: n_inter_capped is a
         # LOWER bound on the true intersection; a doc's true hot-shingle
@@ -473,6 +496,7 @@ def minhash_lsh_pairs(
     returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >=
     threshold (exact, so the only approximation is RECALL of the LSH
     stage — tuned by bands/rows)."""
+    release_cached("minhash_lsh_pairs")
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, num_hashes, n, text_col, id_col, seed)
@@ -495,11 +519,14 @@ def minhash_lsh_pairs(
     # materialize once: the bucket self-join would otherwise evaluate
     # the signature UDF twice.  persist (not eager localCheckpoint):
     # the join's own execution materializes it — no separate job.
-    banded = banded_raw.persist(StorageLevel.MEMORY_ONLY)
+    banded = cache_frame(banded_raw, "minhash_lsh_pairs")
 
     a = banded.alias("a")
     b = banded.alias("b")
-    cand = (
+    # pair-count-sized; referenced by the pair stream AND (via
+    # ids_needed) by BOTH broadcast builds below — without persist the
+    # bucket join re-executes once per broadcast lineage
+    cand = cache_frame(
         a.join(
             b.hint("shuffle_hash"),
             (F.col("a.band") == F.col("b.band"))
@@ -507,11 +534,8 @@ def minhash_lsh_pairs(
             & (F.col("a.doc") < F.col("b.doc")),
         )
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-        # pair-count-sized; referenced by the pair stream AND (via
-        # ids_needed) by BOTH broadcast builds below — without persist
-        # the bucket join re-executes once per broadcast lineage
-        .persist(StorageLevel.MEMORY_ONLY)
+        .distinct(),
+        "minhash_lsh_pairs",
     )
 
     # exact verify on candidates only (shingles materialized once —
@@ -523,13 +547,12 @@ def minhash_lsh_pairs(
     # magnitude smaller (2.6s -> 0.3s at sf1.0).  Near-dup candidate
     # doc sets are dup-count-sized; at a scale where they stop fitting
     # a broadcast, swap the two hints below for a shuffled join.
-    sh = (
+    sh = cache_frame(
         _with_shingles_jvm(
             spread_scan(df.select(F.col(id_col).alias("doc"), F.col(text_col))),
             text_col, n,
-        )
-        .select("doc", "shingles")
-        .persist(StorageLevel.MEMORY_ONLY)
+        ).select("doc", "shingles"),
+        "minhash_lsh_pairs",
     )
     ids_needed = (
         cand.select(F.col("doc_a").alias("doc"))
@@ -675,26 +698,10 @@ def simhash_pairs(
     )
 
 
-# Frames (edges + final labels) persisted by the CURRENT DRIVER
-# THREAD's most recent connected_components call; released on the next
-# call's entry so a long session holds at most one closure's
-# checkpoint blocks per thread (the knn/rknn release-on-next-call
-# pattern, r4 advisor + verdict item 7).
-from rindex_spark.operators.knn import _ThreadLocalFrameList
-
-_last_cc_frames = _ThreadLocalFrameList()
 # Propagation-round count of the most recent call (rounds that changed
 # at least one label; the final confirming round is excluded) — lets
 # tests assert convergence speed without instrumenting the loop.
 last_cc_rounds: int = 0
-
-
-def _release_cc_frames() -> None:
-    while _last_cc_frames:
-        try:
-            _last_cc_frames.pop().unpersist(blocking=False)
-        except Exception:
-            pass
 
 
 def benchmark_contamination(
@@ -807,8 +814,9 @@ def _local_contract(batches):
     fixpoint (per node, the minimum node id reachable inside the
     partition's subgraph) is exactly the union-find's min-root —
     labels are indices into the SORTED node array, so index order is
-    id order.  Memory O(distinct nodes + edges per partition), the
-    same bound as before."""
+    id order.  Memory is O(E) per partition: every edge of the
+    partition is buffered before the first iteration (plus the O(V)
+    node and label arrays)."""
     As, Bs = [], []
     for b in batches:
         As.append(b["a"].to_numpy(dtype=np.int64))
@@ -855,9 +863,9 @@ def connected_components(
     per round (d -> max(d+1, 2d)), so convergence stays O(log
     diameter).  The changed-flag is BAKED into the checkpointed frame,
     making the fixpoint check a count over cached blocks — no join, no
-    shuffle.  Superseded label frames are unpersisted as soon as the
-    next round's labels materialize (r4 advisor: 30+-round runs
-    accumulated blocks).
+    shuffle.  Every checkpoint of a call is registered with
+    plans/cache.py and released on the next call's entry (or by
+    ``release_cached``), so a long session holds one call's blocks.
 
     ``local_contraction`` (r6): before the shuffle rounds, a
     per-partition union-find (``_local_contract``) collapses each
@@ -892,18 +900,19 @@ def connected_components(
     pair, labeled with the smallest node id reachable from it.
     """
     global last_cc_rounds
+    # every checkpoint of this thread's previous call (plans/cache.py)
+    release_cached("connected_components")
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return _strip_ckpt_stats(df.checkpoint(eager=True))
-    else:
+    def _ckpt(df: DataFrame) -> DataFrame:
+        return _strip_ckpt_stats(
+            checkpoint_frame(
+                df, "connected_components", reliable=checkpoint_dir is not None
+            )
+        )
 
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return _strip_ckpt_stats(df.localCheckpoint(eager=True))
-
-    _release_cc_frames()
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     if local_contraction:
         e = e.mapInPandas(_local_contract, "a long, b long")
@@ -915,7 +924,6 @@ def connected_components(
     edges = _ckpt(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
-    _last_cc_frames.append(edges)
     # FUSED FIRST ROUND (r6): with L = identity, round 1's full form
     # L'(v) = min(L(v), min_neigh L(u), L(L(v))) collapses to
     # min(v, min neighbor) — the jumps are provable no-ops and the
@@ -941,12 +949,10 @@ def connected_components(
     changed = labels.filter("chg").count()
     labels = labels.drop("chg")
     last_cc_rounds = 1 if changed else 0
-    import os as _os
-
-    # RINDEX_CC_NO_CHECK opts out (a known-deep graph saves the one
-    # wasted probe; interleaved A/B at 1M nodes: 2.76s vs 3.30s WITH
-    # the check on the contracted chain bench).
-    if changed and not _os.environ.get("RINDEX_CC_NO_CHECK"):
+    # a known-deep graph pays one wasted probe (interleaved A/B at 1M
+    # nodes: 2.76s without vs 3.30s with it on the contracted chain
+    # bench)
+    if changed:
         # r6 round 3 — cheap convergence check after the fused first
         # round: with local contraction most graphs are ALREADY closed
         # here, but the loop still paid one full round (edge join +
@@ -1026,11 +1032,6 @@ def connected_components(
             )
         )
         changed = new_labels.filter("chg").count()
-        if labels is not edges:  # superseded round frame: release now
-            try:
-                labels.unpersist(blocking=False)
-            except Exception:
-                pass
         labels = new_labels.drop("chg")
         if changed == 0:
             break
@@ -1040,7 +1041,6 @@ def connected_components(
             f"connected_components did not converge in {max_iters} rounds "
             "(graph diameter exceeds max_iters)"
         )
-    _last_cc_frames.append(labels)
     return labels.select("id", F.col("comp").alias("component"))
 
 

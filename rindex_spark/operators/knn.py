@@ -52,21 +52,26 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import os
-import threading
 import time as _time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from rindex_spark.config import EngineConfig, GridSpec
-from rindex_spark.grid import ring_lower_bound, with_cells
+from rindex_spark.grid import (
+    grid_and_extent,
+    grid_from_extent,
+    ring_lower_bound,
+    shrink_to_density,
+    with_cells,
+)
+from rindex_spark.plans.cache import cache_frame, release_cached
 
-_SUPER = 4  # grid cells per supercell side (power of 2: >> 2)
 _SUPER_SHIFT = 2
-# r6: default supercell 8x8 -> 4x4 (RINDEX_SUPER_SHIFT re-sweeps it).
+_SUPER = 1 << _SUPER_SHIFT  # grid cells per supercell side
+# r6: default supercell 8x8 -> 4x4.
 # The kernel computes the FULL query x candidate matrix per dilated
 # supercell block, so flops/query scale with block area (S + 2*khi)^2
 # while shuffle replication scales with ((S + 2*khi)/S)^2: S=4 trades
@@ -112,54 +117,27 @@ def _state_schema(n_extra: int) -> str:
 # are replicated per salt, queries are split)
 _MAX_GROUP_QUERIES = 32768
 
-class _ThreadLocalFrameList(threading.local):
-    """A per-THREAD list of persisted frames (r4 verdict item 7): the
-    release-on-next-call pattern with a plain module list meant two
-    concurrent driver threads released each other's LIVE round states
-    (correctness survived via deterministic recompute; cost did not).
-    threading.local gives each driver thread its own slot, so a call
-    only ever releases its own thread's predecessor."""
+# khi0 factor re-swept in r6 (1M clustered e2e corpus, interleaved
+# best-of-3, kernel already vectorized): factor 2.0 ships 3.48x of n at
+# 12.8s; 1.5 ships 3.07x at 11.9s; 1.0 ships 2.67x at 11.9s with a
+# doubled (but gate-trivial) brute tail; 3.0 ships 4.30x at 12.2s.  All
+# converge in ONE round on both corpus shapes.  1.5 is the default —
+# same wall as 1.0 with more sparse-corpus margin.
+_KHI0_FACTOR = 1.5
 
-    def __init__(self):
-        self.frames: list = []
-
-    def append(self, frame) -> None:
-        self.frames.append(frame)
-
-    def pop(self):
-        return self.frames.pop()
-
-    def __len__(self) -> int:
-        return len(self.frames)
-
-    def __bool__(self) -> bool:
-        return bool(self.frames)
-
-
-# Persisted per-round state frames of the CURRENT THREAD's most recent
-# knn_for_queries call (r3 verdict item 7: they were MEMORY_ONLY-cached
-# and never unpersisted, so repeated build_knn_graph calls in a long
-# session accumulated blocks until eviction).  Each call releases its
-# thread's predecessor states on entry, bounding the session footprint
-# at one call's round count PER DRIVER THREAD; callers that have fully
-# consumed their output can reclaim immediately via
-# release_round_states().  An unpersisted state that a still-lazy
-# result frame later needs simply recomputes its deterministic lineage
-# (the documented MEMORY_ONLY eviction semantics — correctness is
-# unaffected).
-_round_states = _ThreadLocalFrameList()
-
-
-def release_round_states(blocking: bool = False) -> None:
-    """Unpersist all round-state frames of the current thread's most
-    recent knn_for_queries call.  Safe to call any time after the
-    caller has consumed (collected / written) the returned DataFrame."""
-    while _round_states:
-        try:
-            _round_states.pop().unpersist(blocking=blocking)
-        except Exception:
-            pass
-
+# cogroup on a HASH BUCKET of the supercell key, not the key itself:
+# millions of points mean tens of thousands of supercell groups, and
+# Spark's per-group pandas machinery was ~95% of round CPU.  Buckets
+# keep each task's Arrow/pandas overhead O(1); the UDF slices subgroups
+# out with one sort + searchsorted.  16x parallelism (r6: was 4x): with
+# shuffle partitions at core count, 4 buckets per task is LUMPY — the
+# round stage ran 2x-skewed (task runtime 68s / 32 tasks but 4.5s wall
+# at 1M events); 16 buckets per task smooths the hash placement
+# (interleaved A/B best-of-4: 6.25s -> 5.36s) while each bucket still
+# holds thousands of queries, so the per-bucket slicing overhead stays
+# noise.  n_buckets = max(_MIN_BUCKETS, _BUCKETS_PER_CORE x parallelism).
+_MIN_BUCKETS = 64
+_BUCKETS_PER_CORE = 16
 
 # Diagnostics of the most recent knn_for_queries call when
 # RINDEX_KNN_STATS is set (r4 verdict item 8: promote the candidate-
@@ -549,15 +527,14 @@ def _small_frontier_knn(
         if n_extra
         else None
     )
-    # per-query upper bound on the true k-th distance (inf = no bound)
+    # per-query upper bound on the true k-th distance (inf = no bound);
+    # rows without carried state keep the unbounded scan
     kth_ub = np.full(nq_all, np.inf)
-    try:
+    if nq_all and {"cnt", "kth"} <= set(frontier_rows[0].__fields__):
         cnt_a = np.array([r["cnt"] for r in frontier_rows], dtype=np.int64)
         kth_a = np.array([r["kth"] for r in frontier_rows], dtype=np.float64)
         has = cnt_a >= k
         kth_ub[has] = kth_a[has]
-    except Exception:
-        pass  # rows without carried state: unbounded scan
     # spatial chunking: bounded queries sorted by (x, y) so chunk boxes
     # stay tight; unbounded (inf) queries go LAST in their own chunks
     # so one of them never widens a bounded chunk to a full scan
@@ -739,13 +716,12 @@ def knn_for_queries(
     together with ``spec`` so no per-call fixed driver job remains
     (grid.grid_and_extent computes both in one aggregate).
     """
+    # persisted round states of this thread's previous call: see
+    # plans/cache.py for the lifecycle
+    release_cached("knn_for_queries")
     extra_cols = tuple(extra_cols)
     n_extra = len(extra_cols)
     spark = points.sparkSession
-    # supercell side (cells) — read once per call so every round of one
-    # call agrees (the annulus trim's klo is interpreted in THIS scale)
-    _ss = int(os.environ.get("RINDEX_SUPER_SHIFT", str(_SUPER_SHIFT)))
-    _S = 1 << _ss
     out_schema = "qid long, id long, dist double, rank int"
     # k = 0 / empty index => empty result (rindex.rs:198-200), before any
     # config validation (the reference validates k only at construction).
@@ -754,36 +730,14 @@ def knn_for_queries(
     cfg = cfg or EngineConfig(k=k)
 
     # one aggregate job yields both the grid spec and the extent
-    ext = extent if extent is not None else points.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("x").alias("xmin"),
-        F.max("x").alias("xmax"),
-        F.min("y").alias("ymin"),
-        F.max("y").alias("ymax"),
-    ).collect()[0]
+    if extent is None:
+        spec0, ext = grid_and_extent(points, cfg)
+    else:
+        spec0, ext = None, extent
     if not ext["n"]:
         return spark.createDataFrame([], out_schema)
     if spec is None:
-        from rindex_spark.grid import grid_from_extent
-
-        spec = grid_from_extent(ext, cfg)
-        # density-adaptive shrink: skewed (clustered/urban) data makes
-        # mean-sized cells quadratically expensive in the cores
-        from rindex_spark.grid import with_cells as _wc
-
-        occ = (
-            _wc(points.select("x", "y"), spec)
-            .groupBy("ix", "iy")
-            .agg(F.count(F.lit(1)).alias("occ"))
-        )
-        p = occ.agg(F.expr("percentile(occ, 0.95, occ)").alias("p")).collect()[0]["p"]
-        t = cfg.effective_target_per_cell
-        if p and p > 2.0 * t:
-            spec = GridSpec(
-                cell_size=max(spec.cell_size * (t / p) ** 0.5, 1e-9),
-                x0=spec.x0,
-                y0=spec.y0,
-            )
+        spec = shrink_to_density(points, spec0 or grid_from_extent(ext, cfg), cfg)
 
     # Ring radius that certifies full coverage of the data extent from
     # ANY query cell (termination backstop for k > n / far-out queries):
@@ -811,8 +765,8 @@ def knn_for_queries(
     r_max = int(span / spec.cell_size) + 2
 
     pts = with_cells(points.select("id", "x", "y", *extra_cols), spec)
-    pts = pts.withColumn("sx", F.shiftright("ix", _ss)).withColumn(
-        "sy", F.shiftright("iy", _ss)
+    pts = pts.withColumn("sx", F.shiftright("ix", _SUPER_SHIFT)).withColumn(
+        "sy", F.shiftright("iy", _SUPER_SHIFT)
     )
 
     # initial ring radius per SUPERCELL, derived from local density: the
@@ -828,21 +782,13 @@ def knn_for_queries(
             F.col("sx").alias("scx"), F.col("sy").alias("scy"), "sc_n"
         )
     )
-    occ_cell = F.col("sc_n") / F.lit(float(_S * _S))
-    # khi0 factor re-swept in r6 (1M clustered e2e corpus, interleaved
-    # best-of-3, kernel already vectorized): factor 2.0 ships 3.48x of
-    # n at 12.8s; 1.5 ships 3.07x at 11.9s; 1.0 ships 2.67x at 11.9s
-    # with a doubled (but gate-trivial) brute tail; 3.0 ships 4.30x at
-    # 12.2s.  All converge in ONE round on both corpus shapes.  1.5 is
-    # the new default — same wall as 1.0 with more sparse-corpus
-    # margin; the env knob is for re-sweeping on new data shapes.
-    khi0_factor = float(os.environ.get("RINDEX_KHI0_FACTOR", "1.5"))
+    occ_cell = F.col("sc_n") / F.lit(float(_SUPER * _SUPER))
     khi0 = F.least(
         F.greatest(
             F.lit(1).cast("long"),
             F.ceil(
                 F.sqrt(
-                    F.lit(khi0_factor * k) / F.greatest(occ_cell, F.lit(0.05))
+                    F.lit(_KHI0_FACTOR * k) / F.greatest(occ_cell, F.lit(0.05))
                 )
             ).cast("long"),
         ),
@@ -863,8 +809,8 @@ def knn_for_queries(
             y="qy",
             prefix="q",
         )
-        .withColumn("sx", F.shiftright("qix", _ss))
-        .withColumn("sy", F.shiftright("qiy", _ss))
+        .withColumn("sx", F.shiftright("qix", _SUPER_SHIFT))
+        .withColumn("sy", F.shiftright("qiy", _SUPER_SHIFT))
         .join(
             F.broadcast(sc_counts),
             (F.col("sx") == F.col("scx")) & (F.col("sy") == F.col("scy")),
@@ -897,35 +843,15 @@ def knn_for_queries(
     state_schema = _state_schema(n_extra)
     finished_parts: list[DataFrame] = []
     debug = bool(os.environ.get("RINDEX_DEBUG_TIMING"))
-    # cogroup on a HASH BUCKET of the supercell key, not the key itself:
-    # millions of points mean tens of thousands of supercell groups, and
-    # Spark's per-group pandas machinery was ~95% of round CPU.  Buckets
-    # keep each task's Arrow/pandas overhead O(1); the UDF slices
-    # subgroups out with one sort + searchsorted.  16x parallelism (r6:
-    # was 4x): with shuffle partitions at core count, 4 buckets per
-    # task is LUMPY — the round stage ran 2x-skewed (task runtime 68s /
-    # 32 tasks but 4.5s wall at 1M events); 16 buckets per task smooths
-    # the hash placement (interleaved A/B best-of-4: 6.25s -> 5.36s)
-    # while each bucket still holds thousands of queries, so the
-    # per-bucket slicing overhead stays noise.
-    n_buckets = int(
-        os.environ.get("RINDEX_KNN_BUCKETS", 0)
-    ) or max(64, spark.sparkContext.defaultParallelism * 16)
+    n_buckets = max(
+        _MIN_BUCKETS, spark.sparkContext.defaultParallelism * _BUCKETS_PER_CORE
+    )
     # gk: the (supercell, window, salt) identity packed into ONE long
     # (xxhash64) — candidates ship 1 key column instead of 5 (40 of the
     # 64 bytes/row of the big shuffle side); see _fn on why collisions
     # are harmless.  The cogroup bucket is pmod(gk, B).
     q_gk = F.xxhash64("sx", "sy", "r_lo", "r_hi", "salt").alias("gk")
     c_gk = F.xxhash64("ksx", "ksy", "klo", "khi", "ksalt").alias("gk")
-
-    # RINDEX_KNN_KEEP_STATES: bench A/B hook (r4 verdict item 1) — keep
-    # the previous call's persisted round states so an IDENTICAL build
-    # reuses them via Spark's structural plan-cache match, reproducing
-    # the r3 "warm" cache-hit behaviour the release fix removed.  The
-    # side-by-side number quantifies how much of a timing delta is the
-    # honesty fix vs machine weather.
-    if not os.environ.get("RINDEX_KNN_KEEP_STATES"):
-        release_round_states()  # free the PREVIOUS call's cached rounds
     stats_on = bool(os.environ.get("RINDEX_KNN_STATS"))
     shipped_rows = 0
     rounds_run = 0
@@ -943,7 +869,7 @@ def knn_for_queries(
             F.col("r_hi").alias("khi"),
             F.col("salt").alias("ksalt"),
         ).distinct()
-        halo = F.ceil(F.col("khi") / F.lit(_S)).cast("long")
+        halo = F.ceil(F.col("khi") / F.lit(_SUPER)).cast("long")
         cells = ring_keys.withColumn(
             "csx", F.explode(F.sequence(F.col("ksx") - halo, F.col("ksx") + halo))
         ).withColumn(
@@ -952,10 +878,10 @@ def knn_for_queries(
         # cell-exact trim of the supercell halo: keep only points within
         # Chebyshev khi CELLS of the supercell's member-cell range (the
         # union of every member query's needed annulus)
-        lo_x = F.col("ksx") * _S - F.col("khi")
-        hi_x = F.col("ksx") * _S + (_S - 1) + F.col("khi")
-        lo_y = F.col("ksy") * _S - F.col("khi")
-        hi_y = F.col("ksy") * _S + (_S - 1) + F.col("khi")
+        lo_x = F.col("ksx") * _SUPER - F.col("khi")
+        hi_x = F.col("ksx") * _SUPER + (_SUPER - 1) + F.col("khi")
+        lo_y = F.col("ksy") * _SUPER - F.col("khi")
+        hi_y = F.col("ksy") * _SUPER + (_SUPER - 1) + F.col("khi")
         # ANNULUS trim: drop the already-seen inner block [range +- klo].
         # Valid because (a) klo = each member query's own previous khi
         # (r_lo carries the prior window and is part of the group key),
@@ -965,10 +891,10 @@ def knn_for_queries(
         # top-k — so every inner-block point is already reflected in the
         # carried state and re-shipping it is pure waste.  Round 0
         # (klo = -1) keeps the full block.
-        seen_lo_x = F.col("ksx") * _S - F.col("klo")
-        seen_hi_x = F.col("ksx") * _S + (_S - 1) + F.col("klo")
-        seen_lo_y = F.col("ksy") * _S - F.col("klo")
-        seen_hi_y = F.col("ksy") * _S + (_S - 1) + F.col("klo")
+        seen_lo_x = F.col("ksx") * _SUPER - F.col("klo")
+        seen_hi_x = F.col("ksx") * _SUPER + (_SUPER - 1) + F.col("klo")
+        seen_lo_y = F.col("ksy") * _SUPER - F.col("klo")
+        seen_hi_y = F.col("ksy") * _SUPER + (_SUPER - 1) + F.col("klo")
         # qualified alias: frontier's subtree references pts (density
         # join), so this is a self-join from Catalyst's point of view
         cp = pts.alias("cp")
@@ -1008,7 +934,7 @@ def knn_for_queries(
         # MEMORY_AND_DISK would accumulate disk blocks across a long
         # session; under memory pressure eviction recomputes a
         # deterministic lineage instead (bounded: rounds are few).
-        state = (
+        state = cache_frame(
             frontier.withColumn("gk", q_gk)
             .withColumn("bkt", F.pmod(F.col("gk"), F.lit(n_buckets)))
             .groupBy("bkt")
@@ -1017,10 +943,9 @@ def knn_for_queries(
                     "bkt", F.pmod(F.col("gk"), F.lit(n_buckets))
                 ).groupBy("bkt")
             )
-            .applyInPandas(round_udf, schema=state_schema)
-            .persist(StorageLevel.MEMORY_ONLY)
+            .applyInPandas(round_udf, schema=state_schema),
+            "knn_for_queries",
         )
-        _round_states.append(state)
 
         lb = ring_lower_bound(
             spec, F.col("qx"), F.col("qy"), F.col("qix"), F.col("qiy"), F.col("r_hi")
@@ -1039,8 +964,8 @@ def knn_for_queries(
 
         next_frontier = (
             state.filter(~F.col("is_done"))
-            .withColumn("sx", F.shiftright("qix", _ss))
-            .withColumn("sy", F.shiftright("qiy", _ss))
+            .withColumn("sx", F.shiftright("qix", _SUPER_SHIFT))
+            .withColumn("sy", F.shiftright("qiy", _SUPER_SHIFT))
             .withColumn("r_lo", F.col("r_hi"))
             .withColumn(
                 # Ring jump: lb(R') >= R'*cs, so R' = floor(kth/cs)+1

@@ -38,15 +38,6 @@ def deterministic_fake_decoder(payload: bytes, kind: str, dim: int = 16) -> np.n
     return np.array([c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32)
 
 
-def real_image_decoder(payload: bytes, kind: str, dim: int = 16) -> np.ndarray:
-    """The production hook: decode -> resize -> feature-extract.
-    Requires an imaging library that is NOT in this container."""
-    raise NotImplementedError(
-        "image decoding requires PIL/opencv, not available in this environment; "
-        "use deterministic_fake_decoder for plumbing tests"
-    )
-
-
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes, str], np.ndarray] = deterministic_fake_decoder,

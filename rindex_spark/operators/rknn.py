@@ -31,26 +31,7 @@ from rindex_spark.config import GridSpec
 from rindex_spark.functions.distance import euclidean_nd
 from rindex_spark.grid import cell_min_dist, explode_block, with_cells
 from rindex_spark.operators.stats import knn_dist
-
-# Most-recent persisted per-cell stats frame OF THE CURRENT DRIVER
-# THREAD (r3 advisor: repeated reverse_knn calls in a long session
-# accumulated MEMORY_ONLY blocks; r4 verdict item 7: a plain module
-# list let concurrent driver threads release each other's live
-# frames).  Each call unpersists its thread's predecessor on entry —
-# the in-call cache benefit (the stats agg job + the result join share
-# one materialization) is kept, and the session-wide footprint is
-# bounded at ONE cell-count-sized frame per driver thread.
-from rindex_spark.operators.knn import _ThreadLocalFrameList
-
-_last_stats = _ThreadLocalFrameList()
-
-
-def _release_last_stats() -> None:
-    while _last_stats:
-        try:
-            _last_stats.pop().unpersist(blocking=False)
-        except Exception:
-            pass
+from rindex_spark.plans.cache import adopt_frame, release_cached
 
 
 def rknn_stats(
@@ -71,7 +52,7 @@ def rknn_stats(
     stats frame's lifecycle: release with
     ``handle["stats"].unpersist()`` when the index changes (handles
     are NOT auto-released by later calls, unlike the internal
-    per-call path)."""
+    per-call path, whose frame plans/cache.py releases)."""
     extra_cols = tuple(extra_cols)
     kd = knn_dist(graph, k)  # (id, knn_dist), inf when < k rows
     pts = with_cells(points.select("id", "x", "y", *extra_cols), spec).join(
@@ -128,15 +109,18 @@ def reverse_knn(
     (points, graph, k, spec) — with it, this call launches ZERO fixed
     driver jobs (plan construction only).
     """
+    # the per-call stats frame of this thread's previous call (the
+    # in-call cache benefit — the stats agg job and the result join
+    # share one materialization — is kept; see plans/cache.py)
+    release_cached("reverse_knn")
     extra_cols = tuple(extra_cols)
     spark = points.sparkSession
     if k <= 0:
         return spark.createDataFrame([], "qid long, id long, dist double")
 
     if stats is None:
-        _release_last_stats()
         handle = rknn_stats(points, graph, k, spec, extra_cols=extra_cols)
-        _last_stats.append(handle["stats"])
+        adopt_frame(handle["stats"], "reverse_knn")
     else:
         handle = stats
     pts, stats = handle["pts"], handle["stats"]

@@ -41,26 +41,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# Persisted bucketed-input frame of the CURRENT DRIVER THREAD's most
-# recent sample_to_token_budget call, released on the next call's entry
-# (the knn/rknn/cc release-on-next-call pattern): the bucketed corpus
-# is referenced by the histogram job AND both output branches
-# (keep-above filter + boundary window) — without persist the input
-# lineage (typically the regex-heavy with_text_stats) recomputes once
-# per reference (measured 6.5s -> 2.9s at sf1.0, guide §5 caching
-# rule: reused AND expensive to recompute).
-from rindex_spark.operators.knn import _ThreadLocalFrameList
+from rindex_spark.plans.cache import cache_frame, release_cached
 from rindex_spark.plans.scan import spread_scan
-
-_last_input = _ThreadLocalFrameList()
-
-
-def _release_last_input() -> None:
-    while _last_input:
-        try:
-            _last_input.pop().unpersist(blocking=False)
-        except Exception:
-            pass
 
 
 def sample_to_token_budget(
@@ -88,6 +70,7 @@ def sample_to_token_budget(
 
     returns the kept rows of ``docs`` (all original columns).
     """
+    release_cached("sample_to_token_budget")
     lo, hi = float(order_range[0]), float(order_range[1])
     span = hi - lo
     if span <= 0:
@@ -102,18 +85,18 @@ def sample_to_token_budget(
             F.floor((F.col(order_col) - F.lit(lo)) / F.lit(span) * n_buckets),
         ),
     ).cast("long")
-    # persist: the histogram aggregate below materializes this once;
-    # the two output branches then read cached blocks instead of
-    # recomputing the (often expensive) input lineage.  MEMORY_AND_DISK
-    # — a corpus projection must not silently recompute under memory
-    # pressure mid-query; released on the next call (thread-local).
-    _release_last_input()
-    d = (
-        spread_scan(docs)
-        .withColumn("__bkt", bucket)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # persist: the bucketed corpus is referenced by the histogram job
+    # AND both output branches (keep-above filter + boundary window) —
+    # without it the input lineage (typically the regex-heavy
+    # with_text_stats) recomputes once per reference (measured 6.5s ->
+    # 2.9s at sf1.0).  MEMORY_AND_DISK — a corpus projection must not
+    # silently recompute under memory pressure mid-query; released on
+    # the next call (plans/cache.py).
+    d = cache_frame(
+        spread_scan(docs).withColumn("__bkt", bucket),
+        "sample_to_token_budget",
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _last_input.append(d)
 
     hist = (
         d.groupBy("__bkt")

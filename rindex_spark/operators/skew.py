@@ -1,17 +1,18 @@
-"""Skew tooling: hot-cell detection + salted repartitioning.
+"""Skew tooling: hot-cell detection and key skew profiles.
 
 Urban-density / Zipf-host skew shows up as hot grid cells (the
 reference never faces this — it is single-threaded; its analogue is
 tree rebalancing via forced reinsert + max-variance splits,
 rindex.rs:623-713).  The engine handles skew in three layers:
 
-1. density-adaptive cell sizing (grid.infer_grid_adaptive) — bounds
-   per-cell occupancy by construction;
+1. density-adaptive cell sizing (grid.shrink_to_density, applied by
+   knn_for_queries when it infers its grid) — bounds per-cell
+   occupancy by construction;
 2. hot-supercell SALTING inside the kNN rounds (operators.knn) — no
    single Arrow task owns an oversized query group;
-3. the helpers here for generic pipelines: detect hot keys, salt a
-   DataFrame's partitioning key, and report the skew profile (useful
-   before a groupBy/join on a key you don't control).
+3. the helpers here for generic pipelines: detect hot cells and
+   report a key's skew profile (useful before a groupBy/join on a key
+   you don't control).
 """
 
 from __future__ import annotations
@@ -56,36 +57,3 @@ def hot_cells(
     )
     mean = occ.agg(F.avg("n")).collect()[0][0] or 0.0
     return occ.filter(F.col("n") > cfg.hot_cell_factor * mean)
-
-
-def salted_repartition(
-    df: DataFrame,
-    key_cols: list[str],
-    hot_keys: DataFrame,
-    salt_buckets: int = 8,
-    id_col: str = "id",
-) -> DataFrame:
-    """Adds a ``salt`` column: rows whose key is in the broadcast
-    hot-key set get hash(id) % salt_buckets, others 0 — then
-    repartitions on (key, salt).  The classic key-salting pattern;
-    downstream joins must replicate the other side per salt value."""
-    is_hot = df.join(
-        F.broadcast(
-            hot_keys.select(*[F.col(c).alias(f"__h_{c}") for c in key_cols]).withColumn(
-                "__hot", F.lit(True)
-            )
-        ),
-        [F.col(c) == F.col(f"__h_{c}") for c in key_cols],
-        "left",
-    )
-    out = (
-        is_hot.withColumn(
-            "salt",
-            F.when(
-                F.col("__hot").isNotNull(),
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("__hot", *[f"__h_{c}" for c in key_cols])
-    )
-    return out.repartition(*[F.col(c) for c in key_cols], F.col("salt"))

@@ -73,19 +73,6 @@ def verify_text_invariant(pages: DataFrame) -> int:
     return pages.filter(extract_text(F.col("html")) != F.col("text")).count()
 
 
-def write_pages(pages: DataFrame, path: str, partitions: int = 8) -> None:
-    """Parquet sink, partitioned by lang (partition pruning on the most
-    selective low-cardinality column); sorted within partitions for
-    stable files."""
-    (
-        pages.repartition(partitions, "lang")
-        .sortWithinPartitions("url")
-        .write.mode("overwrite")
-        .partitionBy("lang")
-        .parquet(path)
-    )
-
-
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 

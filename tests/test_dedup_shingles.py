@@ -91,7 +91,9 @@ def test_shingles_match_old_jvm_chain_corpus(spark):
 def test_exploded_grams_matches_explode_of_with_shingles(spark):
     """_exploded_grams must emit EXACTLY the row multiset of
     with_shingles + explode (the slow shape it replaces), on the edge
-    texts and the real corpus, with and without an id column."""
+    texts and the real corpus, with and without an id column — and
+    keep the id's type and its nulls: string ids, and nullable long ids
+    past 2^53 (which a float64 round trip would round)."""
     from collections import Counter
 
     from rindex_spark.operators.dedup import _exploded_grams, with_shingles
@@ -102,7 +104,15 @@ def test_exploded_grams_matches_explode_of_with_shingles(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
         F.col("doc_id").alias("doc"), "text"
     )
-    for src in (df, docs):
+    str_ids = spark.createDataFrame(
+        [(f"u{i}", t) for i, t in enumerate(EDGE_TEXTS)], "doc string, text string"
+    )
+    null_ids = spark.createDataFrame(
+        [(None if i % 3 == 0 else (1 << 60) + i, t) for i, t in enumerate(EDGE_TEXTS)],
+        "doc long, text string",
+    )
+    for src in (df, docs, str_ids, null_ids):
+        assert _exploded_grams(src, "text", 3, id_col="doc").schema["doc"] == src.schema["doc"]
         for n in (3, 8):
             old = Counter(
                 (r["doc"], r["g"])

@@ -263,12 +263,20 @@ def test_range_join_extent_param_zero_jobs_same_result(spark):
     assert got == legacy and len(got) > 0
 
 
+def _held(owner: str) -> int:
+    """Frames the calling thread holds under ``owner`` in the cache
+    registry."""
+    from rindex_spark.plans import cache
+
+    return len(cache._registry.frames.get(owner, ()))
+
+
 def test_knn_round_states_released_across_calls(spark):
     """r3 verdict item 7: repeated build_knn_graph calls must not
     accumulate persisted round states — each call frees its
-    predecessor's, and release_round_states() returns the persisted-RDD
+    predecessor's, and release_cached() returns the persisted-RDD
     count to baseline."""
-    from rindex_spark.operators import knn as knn_mod
+    from rindex_spark import release_cached
 
     rng = np.random.default_rng(29)
     coords = rng.uniform(-50.0, 50.0, size=(300, 2))
@@ -280,7 +288,7 @@ def test_knn_round_states_released_across_calls(spark):
     # Spark's ContextCleaner asynchronously unpersists earlier tests'
     # garbage-collected caches, so unrelated entries may vanish at any
     # moment during this test (observed as an order-dependent flake).
-    knn_mod.release_round_states(blocking=True)
+    release_cached(blocking=True)
     baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
     counts = []
     states = []
@@ -288,16 +296,60 @@ def test_knn_round_states_released_across_calls(spark):
         g = build_knn_graph(pts, 5)
         assert g.count() == 300 * 5
         counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
-        states.append(len(knn_mod._round_states))
+        states.append(_held("knn_for_queries"))
     # the registry holds exactly ONE call's round states at any time
     # (each call releases its predecessor's on entry) ...
     assert states[0] > 0
     assert states[1] == states[0] and states[2] == states[1]
     # ... so the JVM cache population never grows across calls
     assert counts[1] <= counts[0] and counts[2] <= counts[1]
-    knn_mod.release_round_states(blocking=True)
-    assert len(knn_mod._round_states) == 0
+    release_cached("knn_for_queries", blocking=True)
+    assert _held("knn_for_queries") == 0
     assert spark.sparkContext._jsc.getPersistentRDDs().size() <= baseline
+
+
+def test_small_frontier_scan_with_and_without_carried_state(spark):
+    """The brute-tail scan matches brute force for frontier rows that
+    carry ring-round state (cnt/kth, bounded or not) and for rows that
+    carry none; a malformed carried value raises instead of silently
+    disabling the box prune."""
+    from pyspark.sql import Row
+
+    from rindex_spark.operators.knn import _small_frontier_knn
+    from tests.conftest import brute_knn_queries
+
+    rng = np.random.default_rng(41)
+    coords = rng.uniform(-50.0, 50.0, size=(300, 2))
+    pts = make_points(spark, coords)
+    qc = rng.uniform(-60.0, 60.0, size=(12, 2))
+    k = 6
+    want = brute_knn_queries(qc, coords, np.arange(len(coords)), k)
+
+    def scan(rows):
+        got: dict[int, list] = {}
+        for r in _small_frontier_knn(pts, rows, k).collect():
+            got.setdefault(r["qid"], []).append((r["rank"], r["dist"], r["id"]))
+        return {q: [(d, i) for _, d, i in sorted(v)] for q, v in got.items()}
+
+    bare = [Row(qid=i, qx=float(x), qy=float(y)) for i, (x, y) in enumerate(qc)]
+    # carried k-th distances: valid upper bounds for even qids (cnt = k),
+    # no bound for odd ones (cnt < k)
+    carried = [
+        Row(
+            qid=i, qx=float(x), qy=float(y),
+            cnt=k if i % 2 == 0 else k - 2,
+            kth=want[i][-1][0] * 1.5 if i % 2 == 0 else float("inf"),
+        )
+        for i, (x, y) in enumerate(qc)
+    ]
+    for rows in (bare, carried):
+        got = scan(rows)
+        for i, w in enumerate(want):
+            assert [d for d, _ in got[i]] == pytest.approx([d for d, _ in w], abs=1e-12)
+            assert [j for _, j in got[i]] == [j for _, j in w]
+    bad = [Row(qid=0, qx=0.0, qy=0.0, cnt="many", kth=1.0)]
+    with pytest.raises(ValueError):
+        _small_frontier_knn(pts, bad, k)
 
 
 def test_knn_queries_far_outside_extent(spark):
@@ -313,12 +365,13 @@ def test_knn_queries_far_outside_extent(spark):
 
 def test_single_bucket_cogroup_exact(spark, monkeypatch):
     """Adversarial grouping: force EVERY supercell subgroup into one
-    cogroup bucket (RINDEX_KNN_BUCKETS=1).  The kernel's sorted
-    single-key subgroup slicing (and the packed-gk superset-merge
-    argument) must keep results exact under maximal collision."""
-    import os
+    cogroup bucket (n_buckets = 1).  The kernel's sorted single-key
+    subgroup slicing (and the packed-gk superset-merge argument) must
+    keep results exact under maximal collision."""
+    from rindex_spark.operators import knn as knn_mod
 
-    monkeypatch.setitem(os.environ, "RINDEX_KNN_BUCKETS", "1")
+    monkeypatch.setattr(knn_mod, "_MIN_BUCKETS", 1)
+    monkeypatch.setattr(knn_mod, "_BUCKETS_PER_CORE", 0)
     rng = np.random.default_rng(29)
     coords = np.concatenate(
         [
@@ -356,7 +409,7 @@ def test_knn_concurrent_driver_threads_isolated_states(spark):
     both results remain exact."""
     import threading
 
-    from rindex_spark.operators import knn as knn_mod
+    from rindex_spark import release_cached
 
     rng = np.random.default_rng(31)
     coords = rng.uniform(-50.0, 50.0, size=(400, 2))
@@ -366,6 +419,7 @@ def test_knn_concurrent_driver_threads_isolated_states(spark):
         k: brute_knn(coords, np.arange(len(coords)), k) for k in (3, 5)
     }
 
+    release_cached(blocking=True)
     results: dict[int, list] = {}
     slot_sizes: dict[int, list] = {3: [], 5: []}
     errs: list = []
@@ -376,8 +430,9 @@ def test_knn_concurrent_driver_threads_isolated_states(spark):
             for _ in range(2):  # interleaved calls per thread
                 barrier.wait(timeout=300)
                 g = build_knn_graph(pts, k).collect()
-                slot_sizes[k].append(len(knn_mod._round_states))
+                slot_sizes[k].append(_held("knn_for_queries"))
                 results[k] = g
+            release_cached()  # a thread's frames are its own to free
         except Exception as e:  # pragma: no cover - surfaced below
             errs.append(e)
 
@@ -392,7 +447,8 @@ def test_knn_concurrent_driver_threads_isolated_states(spark):
         # per-thread slot: exactly one call's round states at any time
         assert slot_sizes[k][0] > 0
         assert slot_sizes[k][1] == slot_sizes[k][0]
-    knn_mod.release_round_states(blocking=True)
+    # the worker threads registered nothing in this thread's registry
+    assert _held("knn_for_queries") == 0
 
 
 def test_rknn_stats_handle_no_driver_jobs_and_identical(spark):

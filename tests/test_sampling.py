@@ -93,6 +93,27 @@ def test_decontamination_flags_planted_overlap(spark):
     assert benchmark_contamination(docs, bench, n=4, min_hits=10).count() == 0
 
 
+def test_decontamination_string_doc_ids(spark):
+    """Doc ids keep their type through the gram pass: string ids flag
+    exactly as long ids do."""
+    bench = spark.createDataFrame(
+        [(0, "the capital of france is paris as everyone knows")],
+        "doc_id long, text string",
+    )
+    docs = spark.createDataFrame(
+        [
+            ("page-a", "pretraining corpus text about unrelated topics entirely"),
+            ("page-b", "quiz answer the capital of france is paris obviously"),
+        ],
+        "doc_id string, text string",
+    )
+    hits = {
+        r["doc_id"]: r["n_hits"]
+        for r in benchmark_contamination(docs, bench, n=4).collect()
+    }
+    assert set(hits) == {"page-b"} and hits["page-b"] >= 2
+
+
 def test_decontamination_shuffle_join_path_identical(spark):
     bench = spark.createDataFrame(
         [(0, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from rindex_spark.plans.cache import cache_frame, checkpoint_frame, release_cached
+from rindex_spark.plans.cache import adopt_frame, cache_frame, release_cached
 from rindex_spark.plans.scan import spread_scan
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -863,9 +863,12 @@ def connected_components(
     per round (d -> max(d+1, 2d)), so convergence stays O(log
     diameter).  The changed-flag is BAKED into the checkpointed frame,
     making the fixpoint check a count over cached blocks — no join, no
-    shuffle.  Every checkpoint of a call is registered with
-    plans/cache.py and released on the next call's entry (or by
-    ``release_cached``), so a long session holds one call's blocks.
+    shuffle.  A round's labels checkpoint is freed as soon as the next
+    round's is written, and the edge checkpoint when the call returns.
+    The checkpoint the returned frame reads stays registered with
+    plans/cache.py until ``release_cached()``, which the caller must
+    call only after consuming the result: a released local checkpoint
+    cannot recompute.  Later calls leave earlier results readable.
 
     ``local_contraction`` (r6): before the shuffle rounds, a
     per-partition union-find (``_local_contract``) collapses each
@@ -900,18 +903,19 @@ def connected_components(
     pair, labeled with the smallest node id reachable from it.
     """
     global last_cc_rounds
-    # every checkpoint of this thread's previous call (plans/cache.py)
-    release_cached("connected_components")
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return _strip_ckpt_stats(
-            checkpoint_frame(
-                df, "connected_components", reliable=checkpoint_dir is not None
-            )
-        )
+    def _ckpt(df: DataFrame):
+        """Eager checkpoint -> (frame, the JVM RDD holding its blocks).
+        ``DataFrame.unpersist`` cannot free a checkpoint; that RDD's
+        ``unpersist`` does."""
+        if checkpoint_dir is not None:
+            ck = df.checkpoint(eager=True)
+        else:
+            ck = df.localCheckpoint(eager=True)
+        return _strip_ckpt_stats(ck), ck._jdf.queryExecution().analyzed().rdd()
 
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     if local_contraction:
@@ -921,7 +925,7 @@ def connected_components(
     # checkpoint writes without any shuffle (pair generators emit
     # near-unique pairs; a pathologically duplicated input only
     # inflates the per-round join input, never the result)
-    edges = _ckpt(
+    edges, edges_rdd = _ckpt(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
     # FUSED FIRST ROUND (r6): with L = identity, round 1's full form
@@ -935,7 +939,7 @@ def connected_components(
     # four fewer node-sized joins before the loop.  The null guard
     # preserves the old path's behavior for null ids exactly (a null
     # 'a' never matched the equi-joins, so its label stayed null).
-    labels = _ckpt(
+    labels, labels_rdd = _ckpt(
         edges.groupBy("a")
         .agg(F.min("b").alias("_nb"))
         .select(
@@ -1022,7 +1026,7 @@ def connected_components(
             )
             mins.append(F.coalesce(F.col(f"jc{j}"), F.col("comp")))
             prev = f"jc{j}"
-        new_labels = _ckpt(
+        new_labels, new_rdd = _ckpt(
             stepped.withColumn("_new", F.least(*mins))
             .select(
                 "id",
@@ -1032,7 +1036,9 @@ def connected_components(
             )
         )
         changed = new_labels.filter("chg").count()
-        labels = new_labels.drop("chg")
+        # the new checkpoint cut the lineage to the superseded round's
+        labels_rdd.unpersist(False)
+        labels, labels_rdd = new_labels.drop("chg"), new_rdd
         if changed == 0:
             break
         last_cc_rounds += 1
@@ -1041,6 +1047,8 @@ def connected_components(
             f"connected_components did not converge in {max_iters} rounds "
             "(graph diameter exceeds max_iters)"
         )
+    edges_rdd.unpersist(False)  # the result reads the labels only
+    adopt_frame(labels_rdd, "connected_components")
     return labels.select("id", F.col("comp").alias("component"))
 
 
@@ -1057,7 +1065,8 @@ def dedup_canonical(
     left-anti against the (component-member, keep?) labels — the
     label table is node-sized (only docs that occur in pairs), far
     smaller than the corpus, so at web scale this broadcast/shuffles
-    the small side only."""
+    the small side only.  The result reads a connected_components
+    checkpoint: read it before ``release_cached()``."""
     cc = connected_components(pairs, id_a=id_a, id_b=id_b)
     drop = cc.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)

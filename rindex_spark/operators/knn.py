@@ -729,15 +729,11 @@ def knn_for_queries(
         return spark.createDataFrame([], out_schema)
     cfg = cfg or EngineConfig(k=k)
 
-    # one aggregate job yields both the grid spec and the extent
-    if extent is None:
-        spec0, ext = grid_and_extent(points, cfg)
-    else:
-        spec0, ext = None, extent
+    ext = extent if extent is not None else grid_and_extent(points, cfg)[1]
     if not ext["n"]:
         return spark.createDataFrame([], out_schema)
     if spec is None:
-        spec = shrink_to_density(points, spec0 or grid_from_extent(ext, cfg), cfg)
+        spec = shrink_to_density(points, grid_from_extent(ext, cfg), cfg)
 
     # Ring radius that certifies full coverage of the data extent from
     # ANY query cell (termination backstop for k > n / far-out queries):

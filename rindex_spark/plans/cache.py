@@ -1,14 +1,17 @@
 """One lifecycle for the frames an operator caches.
 
-An operator that persists or checkpoints intermediate frames registers
-each one here under its own function name, the OWNER.  The operator's
-next call releases them on entry, and ``release_cached`` releases them
-on demand.  A long session therefore holds at most one call's frames
-per operator and driver thread, while the lazily returned result of a
-call can still read its frames until then.  An unpersisted frame that a
-still-lazy result needs later recomputes from its deterministic lineage
-(the documented eviction semantics), so an early release costs time,
-never correctness.
+An operator that persists intermediate frames registers each one here
+under its own function name, the OWNER.  The operator's next call
+releases them on entry, and ``release_cached`` releases them on demand.
+A long session therefore holds at most one call's frames per operator
+and driver thread, while the lazily returned result of a call can still
+read its frames until then.  An unpersisted frame that a still-lazy
+result needs later recomputes from its lineage (the documented eviction
+semantics), so an early release costs time, never correctness.  A
+released LOCAL checkpoint has no lineage left to recompute from, so an
+owner registers only the checkpoint its returned frame reads, and does
+not release it on its next call: only ``release_cached`` frees it, once
+the caller has consumed the results.
 
 The registry is per driver THREAD (``threading.local``): two threads
 running the same operator concurrently never release each other's live
@@ -47,34 +50,18 @@ def cache_frame(
 
 def adopt_frame(df: DataFrame, owner: str) -> DataFrame:
     """Register an already-persisted ``df`` under ``owner`` (a frame
-    built by a helper whose other callers own its lifecycle)."""
+    built by a helper whose other callers own its lifecycle, or the JVM
+    RDD holding a checkpoint's blocks)."""
     _register(owner, df.unpersist)
     return df
-
-
-def checkpoint_frame(df: DataFrame, owner: str, reliable: bool = False) -> DataFrame:
-    """Eagerly checkpoint ``df`` — reliably into the context's
-    checkpoint directory, else locally — and register it under
-    ``owner``.
-
-    ``DataFrame.unpersist`` cannot free a checkpoint: the frame is not
-    in the cache manager, its blocks belong to the RDD under its
-    ``LogicalRDD`` plan.  So that RDD is what gets registered.  When the
-    plan is not a ``LogicalRDD`` (a Spark without it), nothing is
-    registered and Spark's ContextCleaner frees the blocks once the
-    frame is garbage, as it would without this registry."""
-    ck = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-    plan = ck._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        _register(owner, plan.rdd().unpersist)
-    return ck
 
 
 def release_cached(owner: str | None = None, blocking: bool = False) -> None:
     """Release the frames the current driver thread registered under
     ``owner`` (every owner's when None).  Safe any time after the
     caller has consumed (collected / written) the results that read
-    them."""
+    them; a result that reads a released checkpoint can no longer be
+    read at all."""
     owners = [owner] if owner is not None else list(_registry.frames)
     for o in owners:
         for release in _registry.frames.pop(o, ()):

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from rindex_spark import (
     connected_components,
+    dedup_canonical,
     knn_for_queries,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -56,17 +57,13 @@ def _inputs(spark):
         [(i, texts[i % 15], i % 11 + 1, (i * 37 % 100) / 100.0) for i in range(30)],
         "doc_id long, text string, n_tokens long, quality_score double",
     )
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 60, 2)] + [(i, i + 3) for i in range(0, 60, 5)],
-        "id_a long, id_b long",
-    )
-    return pts, graph, qs, docs, pairs
+    return pts, graph, qs, docs
 
 
 def _call(op: str, inputs, i: int) -> int:
     """One call of ``op`` on call-``i``-specific plans; returns the
     consumed output's row count."""
-    pts, graph, qs, docs, pairs = inputs
+    pts, graph, qs, docs = inputs
     d = docs.filter(F.col("doc_id") >= -i)  # keeps every row
     if op == "knn_for_queries":
         return knn_for_queries(pts.filter(F.col("id") >= -i), qs, K).count()
@@ -75,8 +72,6 @@ def _call(op: str, inputs, i: int) -> int:
         return reverse_knn(pts.filter(F.col("id") >= -i), graph, qs, K, spec).count()
     if op == "sample_to_token_budget":
         return sample_to_token_budget(d, budget=60).count()
-    if op == "connected_components":
-        return connected_components(pairs.filter(F.col("id_a") >= -i)).count()
     if op == "minhash_lsh_pairs":
         return minhash_lsh_pairs(d, threshold=0.5).count()
     return ngram_jaccard_pairs(d, threshold=0.5, max_df=20).count()
@@ -88,7 +83,6 @@ def _call(op: str, inputs, i: int) -> int:
         "knn_for_queries",
         "reverse_knn",
         "sample_to_token_budget",
-        "connected_components",
         "minhash_lsh_pairs",
         "ngram_jaccard_pairs",
     ],
@@ -114,3 +108,48 @@ def test_repeated_calls_hold_one_calls_frames(spark, op):
     assert counts[2] <= counts[0], counts
     release_cached(blocking=True)
     assert n_rdds() <= baseline
+
+
+def _components(pairs):
+    """Plain-Python union-find oracle: node -> smallest reachable id."""
+    parent = {}
+
+    def find(v):
+        while parent.setdefault(v, v) != v:
+            v = parent[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_connected_components_results_outlive_later_calls(spark):
+    # each call frees its edge and superseded round checkpoints itself
+    # and keeps only the one its lazily returned result reads (a
+    # released local checkpoint cannot recompute), so results stay
+    # readable across later calls until release_cached frees them
+    from rindex_spark.operators import dedup
+
+    release_cached(blocking=True)
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    chains = [[(i, i + 1) for i in range(0, 40 - 10 * c) if i % 13 != c] for c in range(3)]
+    results, rounds = [], []
+    for c, chain in enumerate(chains):
+        df = spark.createDataFrame(chain, "id_a long, id_b long")
+        results.append(connected_components(df, local_contraction=False))
+        rounds.append(dedup.last_cc_rounds)
+        assert jsc.getPersistentRDDs().size() <= baseline + c + 1
+    assert min(rounds) >= 2, rounds  # superseded round checkpoints existed
+    docs = spark.createDataFrame([(i, "t") for i in range(50)], "doc_id long, text string")
+    kept = [dedup_canonical(docs, spark.createDataFrame(ch, "id_a long, id_b long")) for ch in chains]
+    for chain, res, kp in zip(chains, results, kept):
+        comp = _components(chain)
+        assert {r["id"]: r["component"] for r in res.collect()} == comp
+        assert sorted(r["doc_id"] for r in kp.collect()) == [
+            i for i in range(50) if comp.get(i, i) == i
+        ]
+    release_cached(blocking=True)
+    assert jsc.getPersistentRDDs().size() <= baseline
